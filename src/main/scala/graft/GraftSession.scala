@@ -10,10 +10,34 @@ import org.apache.spark.sql.SparkSession
   * UTC for oracle parity.
   */
 object GraftSession {
-  val DefaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `value` of the environment variable `name` as a positive int, or
+    * `default` when it is unset; anything else fails with a message that
+    * names the variable.
+    */
+  def positiveInt(name: String, value: Option[String], default: Int): Int =
+    value match {
+      case None => default
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$v'"))
+    }
+
+  /** The session's core budget, `SPARK_GRAFT_CPUS` (default 32): local
+    * master width, shuffle partitions and driver-local thread count. A
+    * bad value fails the first session build, and again on every later
+    * use (a lazy val that throws is not cached).
+    */
+  lazy val cpus: Int =
+    positiveInt("SPARK_GRAFT_CPUS", sys.env.get("SPARK_GRAFT_CPUS"), 32)
+
+  /** First-wave partition count of `limit` probes,
+    * `SPARK_GRAFT_LIMIT_INITIAL` (default [[cpus]]).
+    */
+  lazy val limitInitial: Int = positiveInt("SPARK_GRAFT_LIMIT_INITIAL",
+    sys.env.get("SPARK_GRAFT_LIMIT_INITIAL"), cpus)
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.shuffle.partitions", DefaultCpus)
+    .config("spark.sql.shuffle.partitions", cpus.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -70,13 +94,12 @@ object GraftSession {
     // first wave to the session's parallelism instead: wave-1 cost is
     // bounded at one task per core, and a gate-sized result arrives in
     // one wave. Tracks core count, not a local constant.
-    .config("spark.sql.limit.initialNumPartitions",
-      sys.env.getOrElse("SPARK_GRAFT_LIMIT_INITIAL", DefaultCpus))
+    .config("spark.sql.limit.initialNumPartitions", limitInitial.toString)
     .config("spark.ui.enabled", "false")
 
   def local(appName: String = "graft"): SparkSession = {
     val s = configure(
-      SparkSession.builder().appName(appName).master(s"local[$DefaultCpus]"))
+      SparkSession.builder().appName(appName).master(s"local[$cpus]"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
 import graft.sources.Sources
@@ -1353,8 +1353,16 @@ object Dedup {
     // jobs; above it, the O(log diameter) distributed loop takes over.
     val longIds = pairs.schema.take(2).forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    if (longIds && pairs.count() <= driverMaxEdges)
-      return driverUnionFind(pairs)
+    if (longIds) {
+      // ONE-JOB gate+collect (as Graph.collectEdgesWithin): inside the gate
+      // the edge list is already in hand; past it, CollectLimit stops
+      // after ~gate rows and the distributed loop recomputes the pairs
+      val gate = driverMaxEdges.max(-1L).min(Int.MaxValue - 1L)
+      val es = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+        .limit((gate + 1).toInt).collect()
+      if (es.length <= gate)
+        return driverUnionFind(pairs.sparkSession, es)
+    }
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint(true)
@@ -1442,9 +1450,7 @@ object Dedup {
       .toDF("id", "label")
   }
 
-  private def driverUnionFind(pairs: DataFrame): DataFrame = {
-    val es = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def driverUnionFind(spark: SparkSession, es: Array[Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -1453,14 +1459,15 @@ object Dedup {
       while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    es.foreach { case (a, b) =>
+    es.foreach { r =>
+      val a = r.getLong(0); val b = r.getLong(1)
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val labels = parent.keysIterator.map(v => (v, find(v))).toSeq
-    pairs.sparkSession.createDataFrame(labels).toDF("id", "label")
+    spark.createDataFrame(labels).toDF("id", "label")
   }
 
   /** The end-use of the dedup family: remove every non-representative

@@ -87,9 +87,10 @@ object Graph {
     * ~80-100 B/edge ≈ 300 MB at the 3M gate, on top of the 48 MB
     * primitive target arrays; both are freed (rows) or retained (arrays)
     * before the local algorithms allocate their CSR structures. Callers
-    * persist `e` BEFORE probing (and unpersist on the local path), so the
-    * past-the-gate fallback reuses the probe's computed partitions
-    * instead of recomputing the distinct from scratch (r15 ADVICE).
+    * probe the UNPERSISTED frame and persist only past the gate: on the
+    * local path a cache would be written during the probe and dropped
+    * unread, while past the gate the fallback recomputes the edge build
+    * once more — the rare, large-graph path pays, not the common one.
     */
   private[graft] def collectEdgesWithin(e: DataFrame,
       gate: Long): Option[(Array[Long], Array[Long])] = {
@@ -124,7 +125,7 @@ object Graph {
     val cores =
       if (sys.env.contains("SPARK_GRAFT_NO_LOCAL_PAR")) 1 // A/B kill-switch
       else math.min(
-        graft.GraftSession.DefaultCpus.toInt,
+        graft.GraftSession.cpus,
         Runtime.getRuntime.availableProcessors()).max(1)
     val nChunks = math.min(cores * 4, n).max(1) // 4×: cheap load balance
     if (nChunks <= 1) { f(0, n); return }
@@ -185,23 +186,17 @@ object Graph {
       iters: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // persisted BEFORE the gate probe (r16, r15 ADVICE): the probe's
-    // CollectLimit executes the distinct's full map side either way; with
-    // the persist in place those partitions land in cache, so the
-    // past-the-gate fallback reuses them instead of recomputing the
-    // distinct from scratch. On the local path the cache is dropped
-    // unread — one ~16 B/edge columnar write during the probe job.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val d0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE-JOB gate+collect (see collectEdgesWithin): inside the gate the
-    // edge list is already in hand — no persist/count round-trip at all
-    collectEdgesWithin(e, EdgeGate) match {
+    // edge list is already in hand — no persist/count round-trip at all;
+    // the frame is persisted only past the gate, where it is reused
+    collectEdgesWithin(d0, EdgeGate) match {
       case Some((srcA, dstA)) =>
-        e.unpersist()
         return pageRankLocalCore(spark, srcA, dstA, iters)
       case None => ()
     }
+    val e = d0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // fuse out-degree into the edge list ONCE (every src has deg ≥ 1, so
       // the inner join keeps all edges) — each iteration then needs a
@@ -537,20 +532,18 @@ object Graph {
     */
   def qTriangles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // persisted BEFORE the gate probe — see the pageRank rationale
-    val und = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und0 = copurchaseEdges(s, dir)
     // ONE-JOB gate+collect (see collectEdgesWithin): inside the gate the
     // collected list IS the edge set (count = length) — no persist /
-    // count / second-collect round-trip
-    collectEdgesWithin(und, EdgeGate) match {
+    // count / second-collect round-trip; persisted only past the gate
+    collectEdgesWithin(und0, EdgeGate) match {
       case Some((srcA, dstA)) =>
-        und.unpersist()
         val (nNodes, nTriangles) = countTrianglesLocalCore(srcA, dstA)
         return Seq((nNodes, srcA.length.toLong, nTriangles))
           .toDF("n_nodes", "n_edges", "n_triangles")
       case None => ()
     }
+    val und = und0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nEdges = und.count()
       val deg = und.select($"src".as("n"), $"dst")
@@ -713,19 +706,17 @@ object Graph {
   def qBfsLevels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val maxDepth = 3
-    // persisted BEFORE the gate probe — see the pageRank rationale
-    val und = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und0 = copurchaseEdges(s, dir)
     // ONE-JOB gate+collect (see collectEdgesWithin); traversal is
     // latency-bound — three shuffle rounds on a memory-sized graph cost
     // seconds the local walk doesn't. The local path fetches only the
-    // UNDIRECTED list and derives degrees + max-degree sources in memory.
-    val levelsLocal = collectEdgesWithin(und, EdgeGate).map {
-      case (srcA, dstA) =>
-        und.unpersist()
-        bfsLevelsLocalCore(s, srcA, dstA, maxDepth)
+    // UNDIRECTED list and derives degrees + max-degree sources in memory;
+    // the frame is persisted only past the gate.
+    val levelsLocal = collectEdgesWithin(und0, EdgeGate).map {
+      case (srcA, dstA) => bfsLevelsLocalCore(s, srcA, dstA, maxDepth)
     }
     val levels = levelsLocal.getOrElse {
+      val und = und0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val e = und.union(und.select($"dst".as("src"), $"src".as("dst")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

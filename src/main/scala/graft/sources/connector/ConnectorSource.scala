@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.immutable.SortedMap
+import scala.collection.mutable.ArrayBuilder
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -261,8 +262,8 @@ final class ConnectorMicroBatchStream(options: CaseInsensitiveStringMap,
           "an at-least-once sender must reconnect and re-send from its acked por")
     e.toArray.map { case (sid, hi) =>
       // no start position for a new stream → everything up to hi
-      ConnectorPartition(server.slice(sid, s.getOrElse(sid, Long.MinValue), hi))
-    }.filter(_.rows.nonEmpty).toArray[InputPartition]
+      server.slice(sid, s.getOrElse(sid, Long.MinValue), hi)
+    }.filter(_.numRows > 0).toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -280,21 +281,80 @@ final class ConnectorMicroBatchStream(options: CaseInsensitiveStringMap,
 /** One buffered slice of one stream, shipped driver → executor inside the
   * task (the rows already live on the driver — same shape as Spark's own
   * socket source; bounded by the credit window).
+  *
+  * Columnar on purpose: row `i` is `(streamId, messageIds(i),
+  * eventTimes(i), key, value)`, where the key is the next `keyLens(i)`
+  * bytes of `bytes` and the value the `valueLens(i)` bytes after it
+  * (length −1 = null, consuming no bytes). Spark keeps the planned
+  * partitions in `MicroBatchScanExec.inputPartitions`, a NON-transient
+  * field, so every plan copy it Java-serializes — the closure check, each
+  * stage's task binary, each stateful task's deserialization — carries
+  * the whole batch. As a row array of tuples that was about five objects
+  * per row, each written and read one at a time; here it is five
+  * primitive arrays, which Java serialization copies in bulk (24 B per
+  * row plus the key and value bytes).
   */
-final case class ConnectorPartition(
-    rows: Array[(Long, Long, Long, Array[Byte], Array[Byte])])
-  extends InputPartition
+final class ConnectorPartition(
+    val streamId: Long,
+    val messageIds: Array[Long],
+    val eventTimes: Array[Long],
+    val keyLens: Array[Int],
+    val valueLens: Array[Int],
+    val bytes: Array[Byte]) extends InputPartition {
+  def numRows: Int = messageIds.length
+}
+
+object ConnectorPartition {
+  /** Appends rows in message-id order. */
+  final class Builder(streamId: Long) {
+    private val mids = new ArrayBuilder.ofLong
+    private val ets = new ArrayBuilder.ofLong
+    private val keyLens = new ArrayBuilder.ofInt
+    private val valueLens = new ArrayBuilder.ofInt
+    private val bytes = new ArrayBuilder.ofByte
+
+    def add(messageId: Long, eventTime: Long, key: Array[Byte],
+        value: Array[Byte]): Unit = {
+      mids += messageId
+      ets += eventTime
+      keyLens += put(key)
+      valueLens += put(value)
+    }
+
+    private def put(b: Array[Byte]): Int =
+      if (b == null) -1 else { bytes.addAll(b); b.length }
+
+    def result(): ConnectorPartition = new ConnectorPartition(streamId,
+      mids.result(), ets.result(), keyLens.result(), valueLens.result(),
+      bytes.result())
+  }
+}
 
 object ConnectorReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val rows = partition.asInstanceOf[ConnectorPartition].rows
+      private val p = partition.asInstanceOf[ConnectorPartition]
       private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (sid, mid, et, key, value) = rows(i)
-        new GenericInternalRow(Array[Any](sid, mid, et, key, value))
+      private var offset = 0 // where row i's key bytes start
+
+      override def next(): Boolean = {
+        if (i >= 0 && i < p.numRows)
+          offset += math.max(p.keyLens(i), 0) + math.max(p.valueLens(i), 0)
+        i += 1
+        i < p.numRows
       }
+
+      override def get(): InternalRow = {
+        val key = bytesAt(offset, p.keyLens(i))
+        val value = bytesAt(offset + math.max(p.keyLens(i), 0), p.valueLens(i))
+        new GenericInternalRow(Array[Any](p.streamId, p.messageIds(i),
+          p.eventTimes(i), key, value))
+      }
+
+      private def bytesAt(from: Int, len: Int): Array[Byte] =
+        if (len < 0) null
+        else java.util.Arrays.copyOfRange(p.bytes, from, from + len)
+
       override def close(): Unit = ()
     }
 }
@@ -412,18 +472,23 @@ private[connector] final class ConnectorServer(requestedPort: Int,
     }
   }
 
-  /** Rows with `lo < message_id ≤ hi` for one stream, in id order. */
-  def slice(sid: Long, lo: Long, hi: Long): Array[(Long, Long, Long, Array[Byte], Array[Byte])] =
+  /** Rows with `lo < message_id ≤ hi` for one stream, in id order, copied
+    * straight into one columnar block in a single pass under the lock.
+    */
+  def slice(sid: Long, lo: Long, hi: Long): ConnectorPartition = {
+    val out = new ConnectorPartition.Builder(sid)
     lock.synchronized {
-      buffers.get(sid) match {
-        case None => Array.empty
-        case Some(b) =>
-          b.subMap(lo, false, hi, true).entrySet().asScala.iterator.map { e =>
-            val (et, k, v) = e.getValue
-            (sid, e.getKey.longValue, et, k, v)
-          }.toArray
+      buffers.get(sid).foreach { b =>
+        val it = b.subMap(lo, false, hi, true).entrySet().iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          val (et, k, v) = e.getValue
+          out.add(e.getKey, et, k, v)
+        }
       }
     }
+    out.result()
+  }
 
   /** Batch commit: evict ≤ por, then Ack every connection that announced
     * the stream, replenishing exactly the credits it consumed.

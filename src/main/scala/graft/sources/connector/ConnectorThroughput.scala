@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
-
 /** Raw ingest ceiling of the live connector path: an UNPACED sender
   * streams `n` messages through the socket protocol into the
   * `graft-connector` source while the query counts them; reports
@@ -13,15 +11,14 @@ import org.apache.spark.sql.SparkSession
   * the sender-side frame rate. The giles-style soak fixes the RATE to
   * verify accounting; this measures the ceiling.
   *
-  * Run: `sbt "runMain graft.sources.connector.ConnectorThroughput [n]"`.
+  * Run: `sbt "runMain graft.sources.connector.ConnectorThroughput [n]"`;
+  * the engine runs on `SPARK_GRAFT_CPUS` cores (see [[graft.GraftSession]]),
+  * so the ceiling it reports is that of the machine it ran on.
   */
 object ConnectorThroughput {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(500000)
-    val spark = graft.GraftSession.configure(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("connector-throughput")
     val received = new AtomicLong(0)
     val ckpt = Files.createTempDirectory("connector_tp_ckpt").toString
     val q = spark.readStream.format("graft-connector")
@@ -47,7 +44,8 @@ object ConnectorThroughput {
     val e2eSec = (System.nanoTime() - t0) / 1e9
     q.stop(); spark.stop()
     println(
-      s"""{"metric":"connector_throughput","n":$n,"payload_bytes":${payload.length},""" +
+      s"""{"metric":"connector_throughput","cores":${graft.GraftSession.cpus},""" +
+        s""""n":$n,"payload_bytes":${payload.length},""" +
         s""""send_acked_sec":${f"$sendSec%.2f"},"e2e_sec":${f"$e2eSec%.2f"},""" +
         s""""msgs_per_sec":${(n / e2eSec).toInt},"received":${received.get}}""")
   }
